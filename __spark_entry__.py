@@ -1,9 +1,10 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query-registry entry point for the PySpark engine.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+``entry(spark)`` runs the flagship query as a smoke check; ``queries()``
+maps every registered query name to its ``fn(spark, sf_dir)``, and
+``oracle_sql()`` maps each query that has one to its DuckDB SQL twin.
+``tests/run_verify.py`` runs every query at sf=0.01 and compares it
+against its oracle (row count, column names, order-insensitive values).
 
 All real logic lives in ``batch_processing_new_spark``; this module is a
 thin re-export of its query registry.

@@ -328,7 +328,7 @@ def _verify_candidates(
                 " / size(array_union(toks_a, toks_b))"
             ),
         )
-        .where(F.expr(f"_j >= {threshold!r}D"))
+        .where(F.expr(f"_j >= {float(threshold)!r}D"))
         .selectExpr("id_a", "id_b", "round(_j, 6) AS jaccard")
     )
 

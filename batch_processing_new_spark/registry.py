@@ -1,4 +1,4 @@
-"""Named-query registry: the single source of truth for the driver contract.
+"""Named-query registry: a plain name -> ``QuerySpec`` map.
 
 Every implemented operator registers a query here via the ``@query``
 decorator; ``__spark_entry__.py`` re-exports the registry. A query carries:
@@ -7,21 +7,19 @@ decorator; ``__spark_entry__.py`` re-exports the registry. A query carries:
 - ``oracle`` — an equivalent ANSI/DuckDB SQL string over the pre-registered
   views (``region nation customer supplier part orders lineitem events
   documents embeddings``), or ``None`` for non-SQL-expressible operators
-  (those get a rows-only check from the driver plus dedicated pytest
-  invariants in ``tests/``).
+  (those get a rows-only check plus dedicated pytest invariants in
+  ``tests/``).
+
+``all_specs()`` returns the queries in registration order (module order
+in ``_QUERY_MODULES``, then definition order within a module).
 
 Column-name contract: every computed column is aliased identically on both
-sides (the driver sorts columns by name before value-hashing).
+sides (the oracle check sorts columns by name before comparing values).
 """
 
 from __future__ import annotations
 
-import glob
 import importlib
-import json
-import os
-import re
-import sys
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -73,20 +71,9 @@ _QUERY_MODULES = [
     "batch_processing_new_spark.sources.kafka_shim",
     "batch_processing_new_spark.streaming.stream_queries",
     "batch_processing_new_spark.streaming.incremental",
-    "batch_processing_new_spark.probes",
 ]
 
-# Diagnostic probes that DIVERGE BY DESIGN (see probes.py): they
-# measure the driver's comparison semantics, so local harnesses must
-# report them without counting them as failures.
-EXPECTED_DIVERGENT_PROBES = {
-    "p03_probe_hugeint_sum",
-    "p06_probe_null_window_order",
-    "p07_probe_decimal_scale",
-}
-
 _loaded = False
-_proven_cache: dict[str, int] | None = None
 
 
 def query(name: str, oracle: str | None = None, doc: str = ""):
@@ -110,113 +97,9 @@ def _load() -> None:
     _loaded = True
 
 
-def _driver_verified() -> dict[str, int]:
-    """Query name -> round of its MOST RECENT green row in any driver
-    CORRECTNESS_r*.json (absent = never driver-evidenced).
-
-    The driver verifies exactly the FIRST 50 entries of ``queries()``
-    per round, so registration order decides which queries get a hard
-    correctness signal. Not-yet-verified queries sort first so
-    coverage accumulates; among verified ones the STALEST evidence
-    sorts first (freshness rotation, r05) so old green rows get
-    re-confirmed instead of the same registration-order prefix
-    re-running forever. ``tests/run_verify.py`` still checks all
-    queries every run regardless of order.
-    """
-    return _scan_driver_artifacts()
-
-
-def _scan_driver_artifacts(root: str | None = None) -> dict[str, int]:
-    """Implementation of ``_driver_verified``; ``root`` overrides the
-    repo root and bypasses the cache (unit tests feed a tmp dir of
-    synthetic CORRECTNESS files)."""
-    global _proven_cache
-    use_cache = root is None
-    if use_cache and _proven_cache is not None:
-        return _proven_cache
-    green: dict[str, int] = {}
-    if root is None:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue  # e.g. CORRECTNESS_LOCAL_* must never count
-        rnd = int(m.group(1))
-        # per-file isolation: ONE truncated/partially-written artifact
-        # (driver interrupted mid-write) must not discard the evidence
-        # parsed from every intact round — that would silently reset
-        # the whole window plan to registration order
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except Exception as e:
-            print(
-                f"registry: skipping malformed driver artifact {path}: {e}",
-                file=sys.stderr,
-            )
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("hash_match") is True or (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            ):
-                green[name] = max(green.get(name, 0), rnd)
-    if use_cache:
-        _proven_cache = green
-    return green
-
-
-# Round-6 window (VERDICT r05 "Next round" #1): EMPTY — with all 196
-# operator queries driver-evidenced as of CORRECTNESS_r05 (193 hash +
-# 3 justified rows-only) there is nothing left to force-lead, so the
-# freshness rotation (r05, commit 3240976) owns the window: the 50
-# stalest-evidenced real queries re-enter first, every entry refreshes
-# about every 4 rounds, zero manual curation. Re-populate ONLY when a
-# driver red needs closure or an oracle upgrade needs its first hash
-# row (the rows-only rule in _driver_verified would otherwise hide it
-# as "proven"). The seven diagnostic probes keep sorting BEHIND every
-# real query (VERDICT r04): their one-shot measurement is recorded in
-# CORRECTNESS_r04; they re-measure the environment only when they
-# rotate in naturally.
-_WINDOW_PRIORITY: list[str] = []
-
-# Unproven queries explicitly PUSHED BEHIND every other unproven query
-# (none this round: the former 12-entry defer set IS round 5's window).
-_WINDOW_DEFER: set[str] = set()
-
-
 def all_specs() -> dict[str, QuerySpec]:
     _load()
-    proven = _driver_verified()
-    prio = {n: i for i, n in enumerate(_WINDOW_PRIORITY)}
-    idx = {n: i for i, n in enumerate(_REGISTRY)}
-    base = len(prio)
-    ordered = sorted(
-        _REGISTRY,
-        key=lambda n: (
-            # probes (p*) sort behind EVERY real query: their
-            # measurement is one-shot and already recorded (r04)
-            not n.startswith("q"),
-            # explicit window entries lead even when a stale driver
-            # row marks them proven (rows-only rows hide upgraded
-            # oracles; re-confirmation rows are wanted twice)
-            n not in prio,
-            prio.get(n, 0),
-            n in proven,
-            base + 1 if n in _WINDOW_DEFER else base,
-            # freshness rotation (r05): among proven queries the
-            # STALEST green row re-enters the window first, so driver
-            # evidence refreshes round-robin instead of the same
-            # registration-order prefix re-running forever
-            proven.get(n, 0),
-            idx[n],
-        ),
-    )
-    return {n: _REGISTRY[n] for n in ordered}
+    return dict(_REGISTRY)
 
 
 def all_queries() -> dict[str, QueryFn]:

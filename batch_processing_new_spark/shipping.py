@@ -6,18 +6,24 @@ able to ``import batch_processing_new_spark`` itself. That holds neither
 when the driver script runs from another cwd nor on a real multi-node
 cluster. The fix is the standard Spark deployment move: zip the package
 and ``sc.addPyFile`` it, which distributes the zip and prepends it to
-every worker's ``sys.path``. Idempotent per SparkContext.
+every worker's ``sys.path``. Idempotent per SparkContext and safe to
+call from concurrent threads (the HTTP service's first requests race
+here): one lock covers the check, the zip write and ``addPyFile``, and
+the zip is written under a temporary name and renamed into place, so
+Spark never copies a half-written archive.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import zipfile
 
 from pyspark.sql import SparkSession
 
 _SHIPPED_CONTEXTS: set[str] = set()
+_LOCK = threading.Lock()
 
 
 def ensure_package_on_executors(spark: SparkSession) -> None:
@@ -26,21 +32,31 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     # GC, so a stop/recreate cycle (the determinism checker's protocol)
     # could silently skip addPyFile for the new context
     key = sc.applicationId
-    if key in _SHIPPED_CONTEXTS:
-        return
+    with _LOCK:
+        if key in _SHIPPED_CONTEXTS:
+            return
+        sc.addPyFile(_package_zip())
+        _SHIPPED_CONTEXTS.add(key)
+
+
+def _package_zip() -> str:
+    """Path of this process's package zip, written once (caller holds
+    ``_LOCK``)."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
     zip_path = os.path.join(
         tempfile.gettempdir(), f"{pkg_name}-{os.getpid()}.zip"
     )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fname in files:
-                    if not fname.endswith(".py"):
-                        continue
-                    full = os.path.join(root, fname)
-                    rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
-                    zf.write(full, rel)
-    sc.addPyFile(zip_path)
-    _SHIPPED_CONTEXTS.add(key)
+    if os.path.exists(zip_path):
+        return zip_path
+    tmp_path = f"{zip_path}.tmp"
+    with zipfile.ZipFile(tmp_path, "w", zipfile.ZIP_DEFLATED) as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for fname in files:
+                if not fname.endswith(".py"):
+                    continue
+                full = os.path.join(root, fname)
+                rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
+                zf.write(full, rel)
+    os.replace(tmp_path, zip_path)
+    return zip_path

@@ -72,8 +72,9 @@ def running_user_stats(events_stream: DataFrame) -> DataFrame:
     exactly this, not state-maintenance superlinearity). The 100 TB
     recipe when the consumer needs FINAL state rather than a per-batch
     changelog: size micro-batches to the emission budget (fewer, larger
-    triggers — measured value-neutral and 5x-fewer-emissions by
-    tools/q78_emission_ab.py), or consume the update stream through a
+    triggers — a recorded r10 trigger-size A/B measured it value-neutral
+    with 5x fewer emissions: exponents A 0.77 vs B 0.74, the whole wall
+    gap being emissions), or consume the update stream through a
     foreachBatch keyed upsert (streaming/incremental.py) so the sink
     holds one row per user instead of every emission.
     """

@@ -400,8 +400,9 @@ def q78_stateful_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and this keep-last dedup then reduces it back to one row per user.
     That shape is right for the harness's deterministic replay; a
     100 TB deployment wanting final state sizes its triggers to the
-    emission budget (measured value-neutral on this operator by
-    tools/q78_emission_ab.py) or swaps the memory sink + dedup for a
+    emission budget (measured value-neutral on this operator by the
+    recorded r10 trigger-size A/B: exponents A 0.77 vs B 0.74, the gap
+    is all emissions) or swaps the memory sink + dedup for a
     foreachBatch keyed upsert (the streaming/incremental.py machinery,
     driver-green as q86).
     """

@@ -126,106 +126,6 @@ def test_poisoned_fixture_builder_shape(tmp_path):
     ).fetchone()[0] >= 2
 
 
-# -- round_report kernels ------------------------------------------------
-
-_rr = load_tool("round_report")
-decode_version, probe_report, status = (
-    _rr.decode_version, _rr.probe_report, _rr.status
-)
-
-
-def test_round_report_status_classification():
-    assert status({"hash_match": True}) == "green"
-    assert status({"hash_match": False, "rows_match": True}) == "red"
-    assert (
-        status({"hash_match": None, "err": "no_oracle", "spark_rows": 5})
-        == "rows_only"
-    )
-    # an erroring rows-only query (spark side crashed) is NOT evidence
-    assert (
-        status({"hash_match": None, "err": "no_oracle", "spark_rows": None})
-        != "rows_only"
-    )
-    assert status({"hash_match": None, "err": "boom"}) == "err:boom"
-
-
-def test_round_report_version_decoding():
-    """10000*major + 100*minor + patch — must invert probes.py's
-    encoding exactly, or a red p01/p02 misreports the driver engine."""
-    assert decode_version(10000) == "1.0.0"
-    assert decode_version(40102) == "4.1.2"
-    assert decode_version(10300) == "1.3.0"
-    assert decode_version(None) == "?"
-
-
-def test_round_report_probe_red_decodes_driver_versions():
-    art = {
-        "p01_probe_duckdb_version": {
-            "hash_match": False, "spark_rows": 10000, "oracle_rows": 10300,
-        },
-        "p03_probe_hugeint_sum": {"hash_match": True},
-    }
-    lines = "\n".join(probe_report(art))
-    # a red p01 reports the DRIVER's duckdb version from oracle_rows
-    assert "driver DuckDB = 1.3.0" in lines
-    # a green p03 must carry the falsification warning
-    assert "FALSIFIES" in lines
-
-
-def test_round_report_probe_expected_pattern_is_quiet():
-    art = {
-        "p03_probe_hugeint_sum": {
-            "hash_match": False, "spark_rows": 1, "oracle_rows": 1,
-        },
-    }
-    lines = "\n".join(probe_report(art))
-    assert "as-expected" in lines and "FALSIFIES" not in lines
-
-
-def test_round_report_errored_probe_is_inconclusive():
-    """An err:* probe row measured NOTHING: it must not read as
-    confirming an expected-red mechanism (ADVICE r04)."""
-    art = {
-        "p03_probe_hugeint_sum": {"hash_match": None, "err": "oracle boom"},
-    }
-    lines = "\n".join(probe_report(art))
-    assert "UNEXPECTED/inconclusive" in lines
-    assert "as-expected" not in lines
-
-
-def test_round_report_unparseable_version_sentinel():
-    """probes.py encodes an unparseable version string as 1 row; the
-    decoder must name it rather than print a fake 0.0.1/0.0.0."""
-    assert "unparseable" in decode_version(1)
-
-
-def test_probe_version_encoder_sentinel():
-    from batch_processing_new_spark.probes import _enc_version
-
-    assert _enc_version("4.1.2") == 40102
-    assert _enc_version("1.0.0") == 10000
-    # garbage encodes to the 1-row sentinel, NOT an empty frame
-    assert _enc_version("nightly-build") == 1
-    assert _enc_version("") == 1
-
-
-def test_round_report_evidence_ages():
-    """Staleness kernel (VERDICT r05 #3): age = analyzed round minus
-    the most recent green/rows-only round; reds and later rounds don't
-    count; never-evidenced queries are omitted."""
-    evidence_ages = load_tool("round_report").evidence_ages
-
-    rounds = {
-        1: {"qa": {"hash_match": True}, "qb": {"hash_match": True}},
-        2: {"qa": {"hash_match": True},
-            "qc": {"err": "no_oracle", "spark_rows": 3}},
-        3: {"qb": {"hash_match": False}},  # red: not evidence
-        4: {"qd": {"hash_match": True}},   # after n: ignored below
-    }
-    ages = evidence_ages(rounds, 3, ["qa", "qb", "qc", "qd", "qe"])
-    assert ages == {"qa": 1, "qb": 2, "qc": 1}
-
-
 def test_canon_sort_cell_numpy_scalars():
     """ADVICE r05: numpy SCALARS in an object column have .tolist()
     but are not sequences — the alignment key must canon them like

@@ -4,6 +4,7 @@ properties, dedup idempotence."""
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from batch_processing_new_spark.operators.dedup import (
@@ -208,6 +209,7 @@ def test_md5_lsh_oracle_twin_recall_and_precision(spark):
     exact >=0.8 ground truth is high (banding with 4 bands of 2
     catches j >= 0.8 with prob 1-(1-j^2)^4 >= 0.997)."""
     from batch_processing_new_spark.operators.dedup import (
+        minhash_lsh_pairs_md5,
         q183_minhash_lsh_oracle,
     )
     from batch_processing_new_spark.sources.readers import load_table
@@ -230,6 +232,18 @@ def test_md5_lsh_oracle_twin_recall_and_precision(spark):
         (r.id_a, r.id_b)
         for r in q183_minhash_lsh_oracle(spark, SF_SMOKE).collect()
     }
+    # a numpy threshold must reach the SQL predicate as a plain float
+    # literal: numpy >= 2 scalars repr as "np.float64(0.5)", which the
+    # stand-in below reproduces under any numpy version
+    class _Numpy2ReprFloat(float):
+        def __repr__(self):
+            return f"np.float64({float(self)})"
+
+    for threshold in (np.float64(0.5), _Numpy2ReprFloat(0.5)):
+        assert {
+            (r.id_a, r.id_b)
+            for r in minhash_lsh_pairs_md5(docs, threshold=threshold).collect()
+        } == got
     # precision is exact by construction (candidates are re-verified)
     assert got <= truth_05
     if strong:

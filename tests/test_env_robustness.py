@@ -33,19 +33,28 @@ _LTZ_FROZEN = {"q80_retention", "q104_hypertable_rollup", "q108_interpolate_gaps
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_no_new_query_outputs_session_zone_timestamp(spark):
+@pytest.fixture(scope="module")
+def registry_frames(spark):
+    """Every registered query's frame at sf0.001, built once for both
+    whole-registry checks below.
+
+    fn() is not free — iterative/streaming queries execute their
+    driver-side loops during construction (BPE merges, stream drains,
+    IVF training) — but every query's OUTPUT schema, the thing these
+    guards check, only exists on the constructed frame."""
     from batch_processing_new_spark import registry
 
+    return {
+        name: spec.fn(spark, SF_DIR)
+        for name, spec in registry.all_specs().items()
+    }
+
+
+def test_no_new_query_outputs_session_zone_timestamp(registry_frames):
     offenders = {}
-    for name, spec in registry.all_specs().items():
+    for name, df in registry_frames.items():
         if name in _LTZ_FROZEN:
             continue
-        # NOTE: fn() is not free — iterative/streaming queries execute
-        # their driver-side loops during construction (BPE merges,
-        # stream drains, IVF training). Accepted: sf0.001 keeps the
-        # full pass ~2 min, and every query's OUTPUT schema — the thing
-        # this guard checks — only exists on the constructed frame.
-        df = spec.fn(spark, SF_DIR)
         ltz = [
             f.name
             for f in df.schema.fields
@@ -60,7 +69,7 @@ def test_no_new_query_outputs_session_zone_timestamp(spark):
     )
 
 
-def test_no_nullable_bigint_exceeds_hash_digit_precision(spark):
+def test_no_nullable_bigint_exceeds_hash_digit_precision(registry_frames):
     """A NULLABLE integer column whose values exceed 9 significant
     digits hashes differently across materialization paths: pandas
     promotes nullable int64 to float64, so the cell renders "%.9g"
@@ -71,13 +80,8 @@ def test_no_nullable_bigint_exceeds_hash_digit_precision(spark):
     such column (now DOUBLE on both sides); this keeps the registry
     free of the class. Non-null int columns are safe (pandas keeps
     int64 -> full digit string everywhere)."""
-    from pyspark.sql import functions as F
-
-    from batch_processing_new_spark import registry
-
     offenders = []
-    for name, spec in registry.all_specs().items():
-        df = spec.fn(spark, SF_DIR)
+    for name, df in registry_frames.items():
         intcols = [
             f.name
             for f in df.schema.fields
