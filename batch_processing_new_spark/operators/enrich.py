@@ -35,7 +35,6 @@ from __future__ import annotations
 import asyncio
 import hashlib
 import time
-from collections import deque
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field, replace
 
@@ -44,13 +43,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SENTINEL = "Error: Unable to process"  # exact string, reference test.py:80
-
-# Driver-side progress accumulators pinned while their queries can still
-# flush updates (see comment at the accumulator() call in enrich()).
-# Bounded: a long-lived service calling enrich() per request must not
-# leak one Accumulator per call forever — only recent queries can have
-# straggler flushes, so keep the last 64 alive.
-_LIVE_ACCUMULATORS: deque = deque(maxlen=64)
 
 
 @dataclass
@@ -354,15 +346,6 @@ def enrich(
             T.StructField("_enrich_latency_ms", T.DoubleType()),
         ]
     )
-    acc = df.sparkSession.sparkContext.accumulator(0)  # progress (test.py:97-101)
-    # Pin the driver-side Accumulator for session lifetime: when the
-    # enriched DataFrame is GC'd, Accumulator.__del__ deregisters the id,
-    # and any late JVM-side update flush (worker reuse / straggler task
-    # completion during the NEXT query) then logs a noisy
-    # "attempted to access non-existent accumulator" DAGScheduler error
-    # (seen in BENCH_r01.json's tail between q30 and q37). One int per
-    # enrich() call — bounded, never data-sized.
-    _LIVE_ACCUMULATORS.append(acc)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -373,7 +356,6 @@ def enrich(
             out["_enrich_error"] = [r[1] for r in results]
             out["_enrich_attempts"] = [r[2] for r in results]
             out["_enrich_latency_ms"] = [r[3] for r in results]
-            acc.add(len(out))
             yield out
 
     result = df.mapInPandas(run, schema=out_schema)

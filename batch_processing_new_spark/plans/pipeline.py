@@ -19,7 +19,7 @@ import json
 import urllib.request
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from batch_processing_new_spark.operators.enrich import (
@@ -78,10 +78,12 @@ def run_enrichment_pipeline(
     """Execute the whole reference flow (§3.1) and return the report.
 
     ``df`` overrides the CSV scan for testing; otherwise ``spec.file_url``
-    is read as CSV. The enrich stage is persisted before its two
-    consumers (sink + error aggregation) — the reference re-reads its
-    output buffer (test.py:231,242); naive Spark would re-run the paid
-    LLM stage instead, so the persist is a correctness-of-cost matter.
+    is read as CSV. The enriched frame has exactly one consumer, the
+    single-file sink: the order-restoring sort is a one-partition shuffle
+    plus a local sort (no range-sampling pass), and ``row_count`` and
+    ``error_indexes`` come from an ``Observation`` on that same plan, so
+    the paid LLM map runs once with no cache and no second job — the
+    reference re-reads its output buffer instead (test.py:231,242).
     """
     spec.validate()
     cfg = EnrichConfig(
@@ -126,45 +128,41 @@ def run_enrichment_pipeline(
     passthrough_tail = tail.withColumn("Response", F.lit(""))
 
     out = enriched_head.unionByName(passthrough_tail)
-    # dual consumption below (write + error agg): persist so the paid
-    # enrichment map runs exactly once
-    out = out.persist()
-    try:
-        ordered = out.orderBy(ROW_ID)
-
-        dest = map_url(output_dir)
-        if dest.scheme == "s3a":
-            # object-store sink (reference put_object + public-read ACL,
-            # test.py:248-253): ONE downloadable object at the final
-            # key (stage + FS rename — a bare .csv(path) write would
-            # leave a part-file DIRECTORY at the advertised key), ACL
-            # via the s3a canned-ACL conf, and the returned URL is the
-            # public HTTPS form the reference hands back
-            from batch_processing_new_spark.sinks.writers import (
-                write_single_csv_hadoop,
-            )
-
-            out_path = f"{apply_s3a_conf(spark, dest, public_read=True)}/{spec.file_name}_final.csv"
-            write_single_csv_hadoop(spark, ordered.drop(ROW_ID), out_path)
-            bucket_key = out_path[len("s3a://"):]
-            bucket, _, key = bucket_key.partition("/")
-            output_path = f"https://{bucket}.s3.amazonaws.com/{key}"
-        else:
-            output_path = write_single_csv(
-                ordered.drop(ROW_ID), f"{output_dir}/{spec.file_name}_final.csv"
-            )
-        row_count = out.count()
-
-        # op 13: error aggregation — filter + count + collect of 1-based
-        # indexes (reference count_errors_in_csv, test.py:40-54)
-        errs = (
-            out.where(F.col("Response") == SENTINEL)
-            .select((F.col(ROW_ID) + 1).alias("idx"))
-            .orderBy("idx")
+    # ONE plan with ONE consumer (the sink), so the paid map runs once
+    # without a cache. repartition(1), not a global sort (its range-
+    # sampling pass re-runs the map) nor coalesce(1) (it would pull the
+    # map into one task, capping calls in flight at one task's
+    # concurrency); the single-file sink funnels through one task anyway.
+    # Row count and 1-based error indexes (op 13, reference
+    # count_errors_in_csv, test.py:40-54) are observed as the sink runs.
+    obs = Observation()  # unnamed: unique per call on a shared session
+    ordered = (
+        out.repartition(1)
+        .sortWithinPartitions(ROW_ID)
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.collect_list(
+                F.when(F.col("Response") == SENTINEL, F.col(ROW_ID) + 1)
+            ).alias("errs"),
         )
-        error_indexes = [int(r.idx) for r in errs.collect()]
-    finally:
-        out.unpersist()
+    )
+
+    dest = map_url(output_dir)
+    if dest.scheme == "s3a":
+        # object-store sink (reference put_object + public-read ACL,
+        # test.py:248-253): ACL via the s3a canned-ACL conf, and the
+        # returned URL is the public HTTPS form the reference hands back
+        out_path = f"{apply_s3a_conf(spark, dest, public_read=True)}/{spec.file_name}_final.csv"
+        write_single_csv(ordered.drop(ROW_ID), out_path)
+        bucket, _, key = out_path[len("s3a://"):].partition("/")
+        output_path = f"https://{bucket}.s3.amazonaws.com/{key}"
+    else:
+        output_path = write_single_csv(
+            ordered.drop(ROW_ID), f"{output_dir}/{spec.file_name}_final.csv"
+        )
+    row_count = obs.get["rows"]
+    error_indexes = sorted(obs.get["errs"])
 
     result = PipelineResult(
         output_path=output_path,

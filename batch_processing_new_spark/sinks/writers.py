@@ -11,48 +11,28 @@ acceptable for a result artifact; internal intermediates should use
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 
 
 def write_single_csv(df: DataFrame, dest_path: str, header: bool = True) -> str:
-    """Write ``df`` as exactly one CSV file at ``dest_path``."""
+    """Write ``df`` as exactly one CSV file at ``dest_path`` on ANY Hadoop
+    filesystem (local paths, file:/, s3a://, hdfs://): stage a coalesced
+    directory, locate the single part file through the FileSystem API,
+    rename it onto the final key, delete the staging dir. On S3 the
+    rename is a server-side copy+delete of ONE small object — the
+    product contract is a single downloadable CSV (reference put_object,
+    test.py:248-253), and a bare ``.csv(dir)`` write would leave a
+    part-file DIRECTORY at the advertised key (NoSuchKey on download).
+    """
+    spark = df.sparkSession
     staging = dest_path + "._staging"
     (
         df.coalesce(1)
         .write.mode("overwrite")
         .option("header", str(header).lower())
         # bare empty field (",\n") like the reference's csv.writer, not "\"\""
-        .option("emptyValue", "")
-        .csv(staging)
-    )
-    part = glob.glob(os.path.join(staging, "part-*.csv"))
-    if not part:  # e.g. empty DataFrame still writes a header-only part
-        part = glob.glob(os.path.join(staging, "part-*"))
-    os.makedirs(os.path.dirname(dest_path) or ".", exist_ok=True)
-    shutil.move(part[0], dest_path)
-    shutil.rmtree(staging, ignore_errors=True)
-    return dest_path
-
-
-def write_single_csv_hadoop(spark, df: DataFrame, dest_path: str, header: bool = True) -> str:
-    """write_single_csv for ANY Hadoop filesystem (s3a://, hdfs://,
-    file:/): stage a coalesced directory, locate the single part file
-    through the FileSystem API, rename it onto the final object key,
-    delete the staging dir. On S3 the rename is a server-side
-    copy+delete of ONE small object — the product contract is a single
-    downloadable CSV (reference put_object, test.py:248-253), and a
-    bare ``.csv(dir)`` write would leave a part-file DIRECTORY at the
-    advertised key (NoSuchKey on download).
-    """
-    staging = dest_path + "._staging"
-    (
-        df.coalesce(1)
-        .write.mode("overwrite")
-        .option("header", str(header).lower())
         .option("emptyValue", "")
         .csv(staging)
     )
@@ -69,6 +49,10 @@ def write_single_csv_hadoop(spark, df: DataFrame, dest_path: str, header: bool =
             break
     if part is None:
         raise FileNotFoundError(f"no part file under {staging}")
+    if fs.getScheme() == "file":
+        # the local FS's checksum sidecar would follow the rename and
+        # leave a hidden .crc beside the one output file
+        fs.delete(fs.getChecksumFile(part), False)
     if fs.exists(dest_p):
         fs.delete(dest_p, False)
     # Hadoop FileSystem.rename signals failure by RETURNING FALSE, not

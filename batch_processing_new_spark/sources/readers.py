@@ -9,8 +9,6 @@ driver load is the 100 TB blocker, so here ingest is a distributed
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -268,11 +266,9 @@ def read_evolved_parquet(spark: SparkSession, path: str) -> DataFrame:
 #: executor run overhead, so tiny inputs must NOT be cut into
 #: core-count slivers — a 0.25 MiB projection in 32 tasks spends ~30x
 #: more wall in per-task overhead than in its own expression work.
-#: The knob only shapes SMALL inputs: at 100 TB every scan already has
+#: The constant only shapes SMALL inputs: at 100 TB every scan already has
 #: >= cores partitions and fan_out no-ops entirely.
-FANOUT_TASK_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_TASK_BYTES", "32768")
-)
+FANOUT_TASK_BYTES = 32768
 
 
 #: Width-decision cache keyed on the ANALYZED plan's semanticHash (plus
@@ -391,9 +387,7 @@ def adaptive_width(
 #: Python-kernel fan_out slice (see fan_out docstring): coarser than the
 #: JVM-expression default because each Python task pays the worker
 #: handshake + Arrow round-trip regardless of slice size.
-FANOUT_PY_TASK_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_PY_TASK_BYTES", "131072")
-)
+FANOUT_PY_TASK_BYTES = 131072
 
 
 def pin_before_sort(df: DataFrame) -> DataFrame:

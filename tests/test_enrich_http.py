@@ -172,3 +172,33 @@ def test_http_concurrency_not_throttled_by_default_executor(fake_server):
     dt = time.monotonic() - t0
     assert all(r[0].startswith("echo::") for r in results)
     assert dt < 5.0
+
+
+def test_pipeline_makes_each_paid_call_exactly_once(fake_server, spark, tmp_path):
+    """The whole pipeline (sink, row count, error report) issues one HTTP
+    request per enriched row: nothing downstream of the paid map re-runs
+    it (a range-sampling sort or a second report job would)."""
+    import csv
+
+    from batch_processing_new_spark.plans.pipeline import (
+        PipelineSpec,
+        run_enrichment_pipeline,
+    )
+
+    src = tmp_path / "in.csv"
+    with open(src, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(["id", "text"])
+        w.writerows([i, f"text {i}"] for i in range(50))
+    spec = PipelineSpec(
+        file_url=str(src),
+        column_index=1,
+        max_rows=30,
+        system_prompt="p",
+        enrich=_cfg(fake_server, "/ok"),
+    )
+    _FakeLLMHandler.counts.pop("/ok", None)
+    res = run_enrichment_pipeline(spark, spec, str(tmp_path / "out"))
+    assert _FakeLLMHandler.counts["/ok"] == 30
+    assert res.row_count == 50
+    assert res.error_indexes == []

@@ -73,3 +73,45 @@ def test_single_enriched_row_boundary(spark, tmp_path):
         rows = list(csv.DictReader(f))
     assert rows[0]["Response"].startswith("resp::")
     assert all(r["Response"] == "" for r in rows[1:])
+
+
+def test_concurrent_pipelines_report_their_own_counts(spark, tmp_path):
+    """Two pipelines running at once on one session (as the HTTP service
+    does) each get their own row count and error indexes."""
+    import threading
+
+    jobs = {
+        "a": (40, 25, {"t3", "t17", "t24", "t30"}),  # t30 is tail: no error
+        "b": (23, 23, {"t0", "t22"}),
+    }
+    expected = {"a": (40, [4, 18, 25]), "b": (23, [1, 23])}
+    results, errors = {}, []
+
+    def run(name, n_rows, max_rows, fails):
+        try:
+            src = _write_csv(
+                tmp_path / f"{name}.csv", [[i, f"t{i}", i] for i in range(n_rows)]
+            )
+            spec = _spec(src, max_rows)
+            spec.enrich = EnrichConfig(
+                transport="mock", mock_fail_inputs=frozenset(fails), retries=1
+            )
+            results[name] = run_enrichment_pipeline(
+                spark, spec, str(tmp_path / f"out_{name}")
+            )
+        except Exception as exc:  # noqa: BLE001 - re-raised via the assert below
+            errors.append(exc)
+
+    threads = [
+        threading.Thread(target=run, args=(name, *job)) for name, job in jobs.items()
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    assert errors == []
+    for name, (rows, idx) in expected.items():
+        assert results[name].row_count == rows
+        assert results[name].error_indexes == idx
+        assert results[name].error_count == len(idx)

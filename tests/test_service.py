@@ -93,15 +93,13 @@ def test_good_job_runs_pipeline(server, input_csv):
 
 
 def test_hadoop_single_csv_writer_local_fs(spark, tmp_path):
-    """write_single_csv_hadoop (the s3a sink path) produces ONE object
-    at the final key on any Hadoop FS — exercised via file:/ here."""
-    from batch_processing_new_spark.sinks.writers import (
-        write_single_csv_hadoop,
-    )
+    """write_single_csv (also the s3a sink path) produces ONE object at
+    the final key on any Hadoop FS — exercised via file:/ here."""
+    from batch_processing_new_spark.sinks.writers import write_single_csv
 
     df = spark.createDataFrame([(1, "x"), (2, "y")], "a int, b string")
     dest = f"file:{tmp_path}/out_final.csv"
-    got = write_single_csv_hadoop(spark, df.orderBy("a"), dest)
+    got = write_single_csv(df.orderBy("a"), dest)
     assert got == dest
     local = str(tmp_path / "out_final.csv")
     import os
@@ -111,6 +109,7 @@ def test_hadoop_single_csv_writer_local_fs(spark, tmp_path):
         lines = f.read().strip().split("\n")
     assert lines[0] == "a,b" and len(lines) == 3
     assert not os.path.exists(local + "._staging")
+    assert os.listdir(tmp_path) == ["out_final.csv"]  # no checksum sidecar
 
 
 def test_bad_value_returns_400(server):
